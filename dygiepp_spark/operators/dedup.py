@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dygiepp_spark import config as C
+
 SIMHASH_BITS = 16  # md5-nibble simhash (portable to the SQL oracle)
 
 
@@ -62,39 +64,80 @@ def dedup_incremental(new_docs: DataFrame, existing_fps: DataFrame,
             .select(id_col, "fp"))
 
 
-def lsh_band_table(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   n_hashes: int = 16, n_bands: int = 4,
-                   df_cap: int | None = 1000) -> DataFrame:
-    """(id, band, sig) MinHash-LSH band-signature table — the corpus
-    state an incremental near-dup pipeline maintains (append
-    survivors' rows after each batch). Same hashing/banding as
-    minhash_lsh_candidates: k xxhash64 minima in one projection + one
-    groupBy, band sig = digest of the band's row minima."""
-    rows = n_hashes // n_bands
-    sh = docs.select(F.col(id_col).alias("id"),
-                     F.explode(word_shingles(text_col)).alias("s"))
-    if df_cap is not None:
-        sh = _drop_hot_shingles(sh, df_cap)
-    hashed = sh.select(
-        "id", *[F.xxhash64(F.lit(seed), "s").alias(f"h{seed}")
-                for seed in range(n_hashes)])
-    mh = hashed.groupBy("id").agg(
-        *[F.min(f"h{seed}").alias(f"h{seed}") for seed in range(n_hashes)])
-    return mh.select(
+# MinHash hash leaves: (minhash of shingle `s` under `seed`, digest of
+# a band's row minima). xxhash64 is the scale path; md5 hex is
+# byte-identical in DuckDB, so the SQL twins certify the same code.
+_LEAVES = {
+    "xxhash64": (lambda seed: F.xxhash64(F.lit(seed), "s"),
+                 lambda rows: F.xxhash64(F.concat_ws(
+                     "|", *[r.cast("string") for r in rows]))),
+    "md5": (lambda seed: F.md5(F.concat(F.lit(f"{seed}|"), "s")),
+            lambda rows: F.md5(F.concat_ws("|", *rows))),
+}
+
+
+def minhash_minima(sh: DataFrame, leaf: str = "xxhash64") -> DataFrame:
+    """(id, s) exploded shingle stream -> (id, h0..h{k-1}) MinHash
+    signature, k = LSH_BANDS * LSH_ROWS_PER_BAND. All k hashes as one
+    projection per shingle row, then k element-wise MINs in a single
+    groupBy — no k-fold row blowup, one shuffle, full map-side
+    partial aggregation."""
+    minhash = _LEAVES[leaf][0]
+    k = C.LSH_BANDS * C.LSH_ROWS_PER_BAND
+    hashed = sh.select("id", *[minhash(seed).alias(f"h{seed}")
+                               for seed in range(k)])
+    return hashed.groupBy("id").agg(
+        *[F.min(f"h{seed}").alias(f"h{seed}") for seed in range(k)])
+
+
+def minhash_bands(sh: DataFrame, leaf: str = "xxhash64") -> DataFrame:
+    """(id, s) exploded shingle stream -> (id, band, sig) LSH band
+    table: band b's sig is the digest of minima
+    h[b*rows .. (b+1)*rows). The one banding every LSH path uses."""
+    digest = _LEAVES[leaf][1]
+    rows = C.LSH_ROWS_PER_BAND
+    return minhash_minima(sh, leaf).select(
         "id",
         F.posexplode(F.array(*[
-            F.xxhash64(F.concat_ws("|", *[
-                F.col(f"h{band * rows + r}").cast("string")
-                for r in range(rows)]))
-            for band in range(n_bands)])).alias("band", "sig"))
+            digest([F.col(f"h{band * rows + r}") for r in range(rows)])
+            for band in range(C.LSH_BANDS)])).alias("band", "sig"))
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """The one (band, sig) self equi-join: (id, band, sig) ->
+    candidate pairs (id1 < id2, n_bands matched). Band sigs are
+    digests, so keys are uniform; true near-dup cliques are the only
+    hot keys and AQE skew-join splits them. Selecting just (id1, id2)
+    prunes the count, leaving the plan of a `.distinct()`."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.sig") == F.col("b.sig"))
+                   & (F.col("a.id") < F.col("b.id")))
+            .groupBy(F.col("a.id").alias("id1"),
+                     F.col("b.id").alias("id2"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_bands")))
+
+
+def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
+                  df_cap: int | None) -> DataFrame:
+    sh = docs.select(F.col(id_col).alias("id"),
+                     F.explode(word_shingles(text_col)).alias("s"))
+    return sh if df_cap is None else _drop_hot_shingles(sh, df_cap)
+
+
+def lsh_band_table(docs: DataFrame, id_col: str = "doc_id",
+                   text_col: str = "text",
+                   df_cap: int | None = 1000) -> DataFrame:
+    """(id, band, sig) MinHash-LSH band-signature table of word
+    shingles — the corpus state an incremental near-dup pipeline
+    maintains (append survivors' rows after each batch)."""
+    return minhash_bands(_doc_shingles(docs, id_col, text_col, df_cap))
 
 
 def lsh_dedup_incremental(new_docs: DataFrame, existing_bands: DataFrame,
                           id_col: str = "doc_id",
                           text_col: str = "text",
                           bands: DataFrame | None = None,
-                          n_hashes: int = 16, n_bands: int = 4,
                           df_cap: int | None = 1000) -> DataFrame:
     """Incremental NEAR-dup dedup: survivors of a NEW ingestion batch
     against the running corpus's LSH band-signature table — the
@@ -116,19 +159,15 @@ def lsh_dedup_incremental(new_docs: DataFrame, existing_bands: DataFrame,
     state table afterwards.
 
     `bands`: optionally pass a precomputed (id, band, sig) table for
-    the new batch (e.g. the md5-portable banding of
-    plans/queries_corpus.py) instead of the internal xxhash64 one —
-    the signature convention must match existing_bands'."""
+    the new batch (e.g. minhash_bands with the md5 leaf) instead of
+    lsh_band_table's — the signature convention must match
+    existing_bands'."""
     nb = bands if bands is not None else lsh_band_table(
-        new_docs, id_col, text_col, n_hashes, n_bands, df_cap)
+        new_docs, id_col, text_col, df_cap)
     hit_corpus = (nb.join(existing_bands.select("band", "sig"),
                           ["band", "sig"], "left_semi")
                   .select("id"))
-    a, b = nb.alias("a"), nb.alias("b")
-    hit_batch = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                        & (F.col("a.sig") == F.col("b.sig"))
-                        & (F.col("a.id") < F.col("b.id")))
-                 .select(F.col("b.id").alias("id")))
+    hit_batch = band_pairs(nb).select(F.col("id2").alias("id"))
     dups = (hit_corpus.unionByName(hit_batch).distinct()
             .withColumnRenamed("id", id_col))
     # anti against the FULL batch (not the band table): a doc that
@@ -185,41 +224,14 @@ def verify_jaccard_pairs(cand: DataFrame, shingled: DataFrame,
 
 def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
-                           n_hashes: int = 16, n_bands: int = 4,
                            df_cap: int | None = 1000) -> DataFrame:
     """MinHash-LSH near-dup candidates (id1 < id2, n_bands matched).
     `df_cap` drops shingles appearing in more than that many docs
     before hashing — the explicit hot-key guard for web-scale corpora
     (stop-phrases otherwise concentrate the band join)."""
     from dygiepp_spark.plans.session import spread
-    docs = spread(docs)
-    rows = n_hashes // n_bands
-    sh = docs.select(F.col(id_col).alias("id"),
-                     F.explode(word_shingles(text_col)).alias("s"))
-    if df_cap is not None:
-        sh = _drop_hot_shingles(sh, df_cap)
-    # all k hashes as one projection per shingle row, then k
-    # element-wise MIN aggregates in a single groupBy — no k-fold row
-    # blowup, one shuffle, full map-side partial aggregation.
-    hashed = sh.select(
-        "id", *[F.xxhash64(F.lit(seed), "s").alias(f"h{seed}")
-                for seed in range(n_hashes)])
-    mh = hashed.groupBy("id").agg(
-        *[F.min(f"h{seed}").alias(f"h{seed}") for seed in range(n_hashes)])
-    bands = mh.select(
-        "id",
-        F.posexplode(F.array(*[
-            F.xxhash64(F.concat_ws("|", *[
-                F.col(f"h{band * rows + r}").cast("string")
-                for r in range(rows)]))
-            for band in range(n_bands)])).alias("band", "sig"))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id1"),
-                     F.col("b.id").alias("id2"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_bands")))
+    return band_pairs(lsh_band_table(spread(docs), id_col, text_col,
+                                     df_cap))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -239,11 +251,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     APPROXIMATION — near-1.0 dups sharing hot shingles can score lower
     or drop out; callers opt into that trade explicitly."""
     from dygiepp_spark.plans.session import spread
-    docs = spread(docs)
-    sh = docs.select(F.col(id_col).alias("id"),
-                     F.explode(word_shingles(text_col)).alias("s"))
-    if df_cap is not None:
-        sh = _drop_hot_shingles(sh, df_cap)
+    sh = _doc_shingles(spread(docs), id_col, text_col, df_cap)
     sz = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     pairs = (a.join(b, (F.col("a.s") == F.col("b.s"))

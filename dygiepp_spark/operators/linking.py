@@ -9,10 +9,9 @@ Design for 10^12 mentions:
    DISTINCT normalized mention texts (node id = xxhash64(norm_text)),
    not mention instances — frequency skew in mentions never reaches a
    join key.
-2. LSH blocking: char-3-gram shingles -> k minhashes -> banded
-   signatures -> self equi-join on (band, signature). Band signatures
-   are digests => uniform keys; true near-dup cliques are the only hot
-   keys and AQE skew-join splits them.
+2. LSH blocking: char-3-gram shingles -> operators/dedup.py's
+   minhash_bands (k xxhash64 minhashes -> banded digest signatures)
+   -> band_pairs, the self equi-join on (band, sig).
 3. Verification: exact Jaccard on distinct-shingle arrays, JVM-side
    (array_intersect/array_union) — candidates only, never all pairs.
 4. Coref edges (in-document antecedent decode, kind='coref' triples)
@@ -30,6 +29,8 @@ from pyspark.sql import functions as F
 
 from dygiepp_spark import config as C
 from dygiepp_spark.operators.cc import connected_components
+from dygiepp_spark.operators.dedup import (band_pairs, minhash_bands,
+                                           verify_jaccard_pairs)
 
 _NORM = "norm_text"
 
@@ -62,50 +63,18 @@ def mention_nodes(mentions: DataFrame) -> DataFrame:
 
 
 def lsh_candidate_edges(nodes: DataFrame,
-                        n_hashes: int = C.LSH_BANDS * C.LSH_ROWS_PER_BAND,
-                        n_bands: int = C.LSH_BANDS,
                         threshold: float = C.LINK_JACCARD_THRESHOLD
                         ) -> DataFrame:
     """LSH blocking + Jaccard verification over distinct text nodes.
     Returns verified edges (src, dst) with jaccard >= threshold."""
-    rows_per_band = n_hashes // n_bands
     shingled = nodes.select(
-        "gid", _NORM, _char_shingles(_NORM).alias("shingles"))
-
-    sh = shingled.select("gid", F.explode("shingles").alias("s"))
-    # xxhash64 (not md5): this path has no SQL oracle to stay
-    # byte-compatible with, and the 64-bit JVM hash is ~5x cheaper.
-    # All k hashes projected per shingle row; k element-wise MINs in
-    # one groupBy (no k-fold row blowup, single shuffle).
-    hashed = sh.select(
-        "gid", *[F.xxhash64(F.lit(seed), "s").alias(f"h{seed}")
-                 for seed in range(n_hashes)])
-    mh = hashed.groupBy("gid").agg(
-        *[F.min(f"h{seed}").alias(f"h{seed}") for seed in range(n_hashes)])
-    bands = mh.select(
-        "gid",
-        F.posexplode(F.array(*[
-            F.xxhash64(F.concat_ws("|", *[
-                F.col(f"h{band * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)]))
-            for band in range(n_bands)])).alias("band", "sig"))
-
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.gid") < F.col("b.gid")))
-            .select(F.col("a.gid").alias("src"),
-                    F.col("b.gid").alias("dst"))
-            .distinct())
-
-    # verify: exact Jaccard on distinct shingle arrays — the shared
-    # blocking-then-verify join (operators/dedup.py, also used by
-    # document dedup)
-    from dygiepp_spark.operators.dedup import verify_jaccard_pairs
-    return verify_jaccard_pairs(
-        cand, shingled.select(F.col("gid").alias("id"),
-                              F.col("shingles").alias("sh")),
-        left_col="src", right_col="dst", threshold=threshold)
+        F.col("gid").alias("id"), _char_shingles(_NORM).alias("sh"))
+    bands = minhash_bands(
+        shingled.select("id", F.explode("sh").alias("s")))
+    cand = band_pairs(bands).select(F.col("id1").alias("src"),
+                                    F.col("id2").alias("dst"))
+    return verify_jaccard_pairs(cand, shingled, left_col="src",
+                                right_col="dst", threshold=threshold)
 
 
 def coref_edges(triples: DataFrame) -> DataFrame:

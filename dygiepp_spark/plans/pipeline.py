@@ -54,7 +54,6 @@ def run_extraction(spark: SparkSession, sf_dir: str, out_dir: str,
     marked done when resume=True. `weights_archive` points at a
     model.tar.gz (S2): broadcast once, decode runs with those weights
     instead of the seed fixture."""
-    from dygiepp_spark.operators.extract import extract_triples
     from dygiepp_spark.sources.pages import synth_pages
 
     run_id = uuid.uuid4().hex[:12]

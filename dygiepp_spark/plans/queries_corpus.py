@@ -21,10 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dygiepp_spark import config as C
+from dygiepp_spark.operators.dedup import (band_pairs, minhash_bands,
+                                           minhash_minima)
 from dygiepp_spark.plans.registry import register
-
-N_MINHASH = 16
-N_BANDS = 4
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,16 +260,18 @@ mh AS (SELECT doc_id, CAST(seed AS INT) AS seed,
 """
 
 
-def _minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (_docs(spark, sf_dir)
-          .select("doc_id", F.explode(_shingles()).alias("s")))
-    seeds = (spark.range(N_MINHASH)
-             .select(F.col("id").cast("int").alias("seed")))
-    return (sh.crossJoin(F.broadcast(seeds))
-            .groupBy("doc_id", "seed")
-            .agg(F.min(F.md5(F.concat(F.col("seed").cast("string"),
-                                      F.lit("|"), F.col("s"))))
-                 .alias("minhash")))
+def _sh_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, s) exploded shingle stream — the `sh` CTE."""
+    return (_docs(spark, sf_dir)
+            .select(F.col("doc_id").alias("id"),
+                    F.explode(_shingles()).alias("s")))
+
+
+def _bands_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, band, sig) band table through the operators' own banding
+    (operators/dedup.py::minhash_bands) with the md5 leaf, which is
+    byte-identical to the `bands` CTE of _BANDS_CTE."""
+    return minhash_bands(_sh_df(spark, sf_dir), leaf="md5")
 
 
 @register("q_minhash_signatures", sql=f"""
@@ -277,21 +279,16 @@ WITH {_SH_CTE}
 SELECT doc_id, seed, minhash FROM mh ORDER BY doc_id, seed
 """)
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X7 MinHash signatures (k=16) via portable md5-string minima.
+    """X7 MinHash signatures (k=16): the md5-leaf minima of
+    operators/dedup.py::minhash_minima, one row per (doc, seed).
     Map-side combine does the heavy lifting: the shuffle carries one
-    (doc, seed, min) row per group, not the shingle stream."""
-    return _minhash_df(spark, sf_dir).orderBy("doc_id", "seed")
-
-
-def _bands_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mh = _minhash_df(spark, sf_dir)
-    return (mh.withColumn("band", F.expr("seed div 4").cast("int"))
-            .groupBy("doc_id", "band")
-            .agg(F.md5(F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda x: x["minhash"]),
-                "|")).alias("band_sig")))
+    row of k minima per doc, not the shingle stream."""
+    k = C.LSH_BANDS * C.LSH_ROWS_PER_BAND
+    mh = minhash_minima(_sh_df(spark, sf_dir), leaf="md5")
+    return (mh.select(F.col("id").alias("doc_id"),
+                      F.posexplode(F.array(*[f"h{i}" for i in range(k)]))
+                      .alias("seed", "minhash"))
+            .orderBy("doc_id", "seed"))
 
 
 _BANDS_CTE = _SH_CTE + """,
@@ -314,14 +311,9 @@ def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows). The join key is a 128-bit digest — uniform, so no skew by
     construction except true near-dup cliques (AQE skew-join is the
     backstop; SURVEY.md §4.3)."""
-    bands = _bands_df(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("doc1"),
-                     F.col("b.doc_id").alias("doc2"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_bands"))
+    return (band_pairs(_bands_df(spark, sf_dir))
+            .select(F.col("id1").alias("doc1"), F.col("id2").alias("doc2"),
+                    "n_bands")
             .orderBy("doc1", "doc2"))
 
 
@@ -539,14 +531,8 @@ FROM reach GROUP BY u ORDER BY doc_id
 
 def _cand_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (src < dst) LSH near-dup candidate edges."""
-    bands = _bands_df(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("src"),
-                    F.col("b.doc_id").alias("dst"))
-            .distinct())
+    return (band_pairs(_bands_df(spark, sf_dir))
+            .select(F.col("id1").alias("src"), F.col("id2").alias("dst")))
 
 
 @register("q_doc_components", sql=_CC_SQL)
@@ -837,14 +823,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dangling-mass fold even though the symmetrized graph has none
     (it evaluates to exactly 0.0 in each engine)."""
     from dygiepp_spark.operators.pagerank import pagerank
-    bands = _bands_df(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("src"),
-                    F.col("b.doc_id").alias("dst"))
-            .distinct())
+    cand = _cand_edges(spark, sf_dir)
     sym = cand.unionByName(
         cand.select(F.col("dst").alias("src"),
                     F.col("src").alias("dst")))
@@ -933,15 +912,13 @@ def q_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the ONLY corpus-scale state touched — one left-semi join on the
     uniform digest key, O(batch) everything else. A new doc is dropped
     iff it band-collides with the corpus or with a smaller-id batch
-    doc (min-id keeper). Banding here is the md5-portable form
-    (_bands_df) so the DuckDB twin certifies the incremental JOIN
-    LOGIC value-exactly; the operator's internal xxhash64 banding is
-    exercised by the planted-dup pytest."""
+    doc (min-id keeper). Banding is the operators' minhash_bands with
+    the md5 leaf (_bands_df), so the DuckDB twin certifies the
+    incremental join value-exactly; the xxhash64 leaf is pinned by
+    tests/test_operators.py."""
     from dygiepp_spark.operators.dedup import lsh_dedup_incremental
     docs = _docs(spark, sf_dir)
-    bands = _bands_df(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "band",
-        F.col("band_sig").alias("sig"))
+    bands = _bands_df(spark, sf_dir)
     existing = (bands.filter(F.col("id") % 2 == 0)
                 .select("band", "sig"))
     new_docs = docs.filter(F.col("doc_id") % 2 == 1)
@@ -1933,14 +1910,7 @@ def q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the same 4 rounds as chained MATERIALIZED CTEs — integer
     vote counts end to end, so the hash match is exact."""
     from dygiepp_spark.operators.lpa import label_propagation
-    bands = _bands_df(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("src"),
-                    F.col("b.doc_id").alias("dst"))
-            .distinct())
+    cand = _cand_edges(spark, sf_dir)
     return (label_propagation(cand, iters=4)
             .select(F.col("node").cast("bigint").alias("doc_id"),
                     F.col("label").cast("bigint").alias("community"))
@@ -2031,14 +2001,7 @@ def q_degree_distribution(spark: SparkSession,
     whether the oriented joins need salting). Two map-side-combined
     aggregations; the shuffles carry (node, count) then
     (degree, count) — never edges."""
-    bands = _bands_df(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("src"),
-                    F.col("b.doc_id").alias("dst"))
-            .distinct())
+    cand = _cand_edges(spark, sf_dir)
     deg = (cand.select(F.col("src").alias("node"))
            .unionByName(cand.select(F.col("dst").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))

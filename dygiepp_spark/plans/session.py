@@ -11,6 +11,7 @@ instead of the 200 default.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -38,6 +39,35 @@ def ensure_pyfiles(spark: SparkSession) -> None:
                             base_dir="dygiepp_spark")
     spark.sparkContext.addPyFile(zip_path)
     spark._dygiepp_pyfiles_added = True  # type: ignore[attr-defined]
+
+
+def _mem_bytes(spec: str) -> int:
+    """JVM memory string -> bytes, read the way spark.driver.memory
+    reads it: k/m/g/t/p suffixes with an optional trailing 'b', a bare
+    'b' for bytes, and no suffix for MiB."""
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)(b?)", spec.strip().lower())
+    if m is None:
+        raise ValueError(f"unreadable memory size {spec!r}")
+    unit = m.group(2) or ("b" if m.group(3) else "m")
+    return int(m.group(1)) << 10 * "bkmgtp".index(unit)
+
+
+def driver_memory() -> str:
+    """spark.driver.memory for the local-mode driver, which is also the
+    only executor. Defaults to half of MemTotal; SPARK_GRAFT_DRIVER_MEM
+    overrides it, and a request above MemTotal raises here, before a
+    JVM is started with a heap the host cannot back."""
+    with open("/proc/meminfo") as f:
+        total = next(int(ln.split()[1]) << 10 for ln in f
+                     if ln.startswith("MemTotal:"))
+    req = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if req is None:
+        return f"{total // 2 >> 20}m"
+    if _mem_bytes(req) > total:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={req} asks for more than this "
+            f"host's MemTotal of {total >> 20} MiB")
+    return req
 
 
 def get_spark(app_name: str = "dygiepp_spark",
@@ -87,8 +117,7 @@ def get_spark(app_name: str = "dygiepp_spark",
         # machine (localCheckpoint blocks + shuffle + Arrow buffers all
         # live here — an undersized heap turns into GC thrash that
         # shows up as mysterious 5x slowdowns mid-benchmark).
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

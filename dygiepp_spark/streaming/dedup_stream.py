@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 def stream_dedup_incremental(spark: SparkSession, docs_dir: str,
                              out_dir: str, state_dir: str,
                              checkpoint_dir: str,
-                             n_hashes: int = 16, n_bands: int = 4,
                              df_cap: int | None = 1000,
                              max_files_per_trigger: int | None = None):
     """File-source stream of (doc_id bigint, text string) batches ->
@@ -68,15 +67,12 @@ def stream_dedup_incremental(spark: SparkSession, docs_dir: str,
             # first epoch: no state partitions exist yet
             state = spark.range(0).select(
                 F.col("id").alias("band"), F.col("id").alias("sig"))
-        surv_ids = lsh_dedup_incremental(
-            batch_df, state, n_hashes=n_hashes, n_bands=n_bands,
-            df_cap=df_cap)
+        surv_ids = lsh_dedup_incremental(batch_df, state, df_cap=df_cap)
         surv = (batch_df.join(surv_ids, "doc_id", "left_semi")
                 .localCheckpoint(eager=True))
         surv.write.mode("overwrite").parquet(
             f"{out_dir}/epoch={int(epoch_id)}")
-        (lsh_band_table(surv, n_hashes=n_hashes, n_bands=n_bands,
-                        df_cap=df_cap)
+        (lsh_band_table(surv, df_cap=df_cap)
          .select("band", "sig")
          .write.mode("overwrite").parquet(
              f"{state_dir}/epoch={int(epoch_id)}"))

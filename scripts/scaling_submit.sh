@@ -10,13 +10,14 @@ SF="${1:-/root/testdata/sf0.1}"
 ZIP="$(mktemp -d)/dygiepp_spark.zip"
 (cd "$REPO" && zip -qr "$ZIP" dygiepp_spark)
 export OMP_NUM_THREADS=1 OPENBLAS_NUM_THREADS=1 MKL_NUM_THREADS=1
+HEAP="$(cd "$REPO" && python3 -c 'from dygiepp_spark.plans.session import driver_memory; print(driver_memory())')"
 
 run() {
   spark-submit --master "local[$1]" --py-files "$ZIP" \
     --conf spark.sql.session.timeZone=UTC \
     --conf spark.sql.execution.arrow.pyspark.enabled=true \
     --conf spark.sql.shuffle.partitions="$1" \
-    --conf spark.driver.memory=48g \
+    --conf spark.driver.memory="$HEAP" \
     --conf spark.ui.enabled=false \
     "$REPO/jobs/bench_extract.py" --sf-dir "$SF" 2>/dev/null | tail -1
 }

@@ -51,6 +51,35 @@ def test_minhash_lsh_finds_exact_dups(spark, docs):
     assert full.count() == dup_pairs.count()
 
 
+def _pin(df) -> tuple[int, str]:
+    import hashlib
+    rows = sorted(tuple(r) for r in df.collect())
+    return len(rows), hashlib.md5(repr(rows).encode()).hexdigest()
+
+
+def test_lsh_xxhash64_leaf_pinned(spark, docs):
+    """The xxhash64 leaf of minhash_bands is the scale path no DuckDB
+    twin can certify (DuckDB 1.0 has no xxhash64), so its outputs are
+    pinned: row count + md5 of the sorted rows, computed before the
+    four banding copies were folded into one primitive. Fixtures:
+    mention nodes of the distinct word bigrams of sf0.001, and
+    lsh_band_table over sf0.001 documents."""
+    from dygiepp_spark.operators.dedup import lsh_band_table
+    from dygiepp_spark.operators.linking import (lsh_candidate_edges,
+                                                 mention_nodes)
+    tk = F.split(F.trim("text"), r"\s+")
+    bigrams = docs.select(F.explode(F.transform(
+        F.sequence(F.lit(1), F.size(tk) - 1),
+        lambda i: F.concat_ws(" ", F.element_at(tk, i),
+                              F.element_at(tk, i + 1)))).alias("mention"))
+    nodes = mention_nodes(bigrams)
+    assert nodes.count() == 916
+    assert _pin(lsh_candidate_edges(nodes)) == (
+        74, "edc927398b42b39c89c3c31674fc9515")
+    assert _pin(lsh_band_table(docs)) == (
+        2000, "c5cbe087398f91ecbb6d0d920b62d936")
+
+
 def test_lsh_dedup_incremental_planted(spark):
     """Incremental near-dup dedup on planted data: a near-copy of a
     corpus doc and the later half of an in-batch exact pair are

@@ -177,14 +177,21 @@ def test_compact_table_binpacks_small_files(spark, tmp_path):
 def test_round5_query_plans_have_no_quadratic_joins(spark):
     """Plan-shape guards for the round-5 pipeline queries: no
     cartesian / nested-loop join anywhere (decontamination and
-    triangles must stay equi-joins on gram / block keys), and
+    triangles must stay equi-joins on gram / block keys; the MinHash
+    twins must hash all k seeds in one projection, never by crossing
+    every shingle with a seed table), and
     sequence packing's cumulative window must partition by the shard
     column — a global (empty-partition) window would serialize the
     corpus through one task."""
     from dygiepp_spark.plans.registry import QUERIES
     from tests.conftest import SF_SMOKE
 
-    for name in ("q_decontaminate", "q_triangles"):
+    for name in ("q_decontaminate", "q_triangles",
+                 # the md5-leaf MinHash twins and their band-pair graphs
+                 "q_minhash_signatures", "q_lsh_candidates",
+                 "q_lsh_incremental", "q_doc_components",
+                 "doc_pagerank", "q_communities",
+                 "q_degree_distribution"):
         p = _plan(QUERIES[name](spark, SF_SMOKE))
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
@@ -193,6 +200,23 @@ def test_round5_query_plans_have_no_quadratic_joins(spark):
     assert "windowspecdefinition(shard" in pack
     assert "windowspecdefinition(doc_id" not in pack.split(
         "windowspecdefinition(shard")[0]
+
+
+def test_driver_memory_rejects_request_above_memtotal(monkeypatch):
+    """An oversized SPARK_GRAFT_DRIVER_MEM fails before any JVM starts;
+    the default is sized from MemTotal, not a fixed 48g."""
+    import pytest
+
+    from dygiepp_spark.plans.session import _mem_bytes, driver_memory
+    assert [_mem_bytes(s) for s in ("100b", "512", "2k", "3gb", "1p")] == [
+        100, 512 << 20, 2 << 10, 3 << 30, 1 << 50]
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1p")
+    with pytest.raises(ValueError, match="MemTotal"):
+        driver_memory()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert driver_memory() == "1g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    assert 0 < _mem_bytes(driver_memory()) < 1 << 50
 
 
 def test_pack_sequences_budget_invariant(spark):
