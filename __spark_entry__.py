@@ -39,8 +39,8 @@ def entry(spark: SparkSession) -> DataFrame:
     from dygiepp_spark.operators.extract import extract_triples
     from dygiepp_spark.sources.pages import synth_pages
 
-    pages = synth_pages(spark, DEFAULT_SF_DIR)
-    return extract_triples(pages, from_html=True)
+    pages = synth_pages(spark, DEFAULT_SF_DIR).drop("partition_id")
+    return extract_triples(pages)[0]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

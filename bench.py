@@ -2,15 +2,20 @@
 
 Default: run the headline pipeline + representative operator queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], print ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on),
+print ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {...}, "sf": ..., "triples_per_sec": ..., ...}
 
 `python bench.py --scaling`: the N vs 4N cluster-size evidence — the
-same extraction job on identical input at local[8] and local[32],
-reporting throughput at both and scaling efficiency
-(eff = (thr@32 / thr@8) / 4, target >= 0.8). Results also appended to
-BENCH_SCALING.json.
+same extraction job on identical input at local[max(1, n/4)] and
+local[n] for n CPUs, reporting throughput at both and scaling
+efficiency (eff = (thr@hi / thr@lo) / (hi / lo), target >= 0.8).
+Results are written to BENCH_SCALING.json.
+
+Every timing goes through `StealMonitor.measure`: one keep rule for
+every stage — a quiet window beats a contaminated one, then the
+minimum.
 """
 
 from __future__ import annotations
@@ -25,7 +30,8 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 
 # Registered (oracle-twinned) queries to time: the JVM-relational core.
 BENCH_QUERIES = [
@@ -91,6 +97,7 @@ class StealMonitor:
         import threading
         self.interval = interval
         self.samples: list[tuple[float, float, float]] = []
+        self.kept: dict[str, dict] = {}
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
@@ -139,6 +146,33 @@ class StealMonitor:
         return {"max_st_pct": round(max(s for _, s, _ in self.samples), 2),
                 "max_sy_pct": round(max(y for _, _, y in self.samples), 2)}
 
+    def measure(self, name: str, thunk) -> tuple[float, object]:
+        """Time `thunk()` and return (kept secs, the kept run's result).
+
+        Keep rule: a quiet window (st <= 5%) beats a contaminated one,
+        then the minimum — a fast sample inside a steal burst never
+        displaces a quiet one. Retry rule: stop once the kept window is
+        quiet and either the stage is short (< 5 s) or it has run
+        twice; at most 4 runs, pausing 5 s after a contaminated one to
+        let the burst pass. The kept window's steal evidence goes to
+        `self.kept[name]`."""
+        kept = None  # ((dirty, secs), result, steal window)
+        for n_run in range(1, 5):
+            t0 = time.time()
+            value = thunk()
+            t1 = time.time()
+            win = self.window_max(t0, t1)
+            dirty = (win.get("max_st_pct") or 0) > 5.0
+            if kept is None or (dirty, t1 - t0) < kept[0]:
+                kept = ((dirty, t1 - t0), value, win)
+            kept_dirty, secs = kept[0]
+            if not kept_dirty and (secs < 5.0 or n_run >= 2):
+                break
+            if dirty:
+                time.sleep(5)
+        self.kept[name] = kept[2]
+        return round(kept[0][1], 3), kept[1]
+
 
 def _session(cores: int):
     from dygiepp_spark.plans.session import ensure_pyfiles, get_spark
@@ -149,14 +183,13 @@ def _session(cores: int):
 
 
 def run_extraction_bench(spark, sf_dir: str, cores: int,
-                         replicas: int = 1, warmup: bool = True,
-                         retries: int = 2, mon=None) -> dict:
+                         mon: StealMonitor, replicas: int = 1) -> dict:
     """The headline job: pages -> decode -> triples, counted.
 
     The sandbox parquet is one split, so repartition to cores*3 — a
     ~MB-scale shuffle standing in for the thousands of natural WARC
-    splits a real input has. `warmup` spawns/primes the python workers
-    (long-lived on a real cluster) outside the timed window.
+    splits a real input has. A warm-up pass spawns/primes the python
+    workers (long-lived on a real cluster) outside the timed window.
     `replicas` tiles the corpus with distinct urls so the timed region
     is dominated by parallel work rather than fixed job overhead —
     used by --scaling so the N-vs-4N comparison measures throughput,
@@ -174,50 +207,14 @@ def run_extraction_bench(spark, sf_dir: str, cores: int,
                  .drop("rep"))
     pages = pages.repartition(cores * 3, "url")
     n_docs = pages.count()
-    if warmup:
-        extract_triples(
-            synth_pages(spark, sf_dir).repartition(cores),
-            from_html=True).count()
-    # best-of-`retries` on the headline number too: a steal burst
-    # during a single timed window otherwise understates the engine
-    # by 2-10x (callers doing their own best-of pass retries=1).
-    # When a StealMonitor is provided, keep retrying (up to 2 extra
-    # attempts) while the KEPT window is contaminated (st > 5%) so
-    # the headline docs/sec never ships with a dirty window when a
-    # quiet one is obtainable.
-    dt = None
-    kept_win = None
-    attempts = 0
-    max_attempts = max(retries, 1) + (2 if mon is not None else 0)
-    while attempts < max_attempts:
-        t0 = time.time()
-        triples = extract_triples(pages, from_html=True)
-        n_triples = triples.count()
-        t1 = time.time()
-        # keep-rule mirrors the graph stages: quiet beats contaminated
-        # (a fast sample inside a steal burst must not displace a
-        # quiet one), min elapsed among equal quietness
-        def _quiet(win) -> bool:
-            if mon is None or win is None:
-                return True
-            return (mon.window_max(*win).get("max_st_pct") or 0) <= 5.0
-
-        new_quiet, kept_quiet = _quiet((t0, t1)), _quiet(kept_win)
-        if dt is None or (new_quiet and not kept_quiet) or (
-                new_quiet == kept_quiet and t1 - t0 < dt):
-            dt, kept_win = t1 - t0, (t0, t1)
-        attempts += 1
-        kept_st = (mon.window_max(*kept_win).get("max_st_pct") or 0) \
-            if mon is not None else 0.0
-        if attempts >= max(retries, 1) and kept_st <= 5.0:
-            break
-        if dt < 5.0 and kept_st <= 5.0:
-            break
+    extract_triples(synth_pages(spark, sf_dir).repartition(cores))[0] \
+        .count()
+    dt, n_triples = mon.measure(
+        "kg_extract", lambda: extract_triples(pages)[0].count())
     return {"n_docs": n_docs, "n_triples": n_triples,
-            "elapsed_sec": round(dt, 3),
+            "elapsed_sec": dt,
             "docs_per_sec": round(n_docs / dt, 2),
-            "triples_per_sec": round(n_triples / dt, 2),
-            "kept_window": kept_win}
+            "triples_per_sec": round(n_triples / dt, 2)}
 
 
 def run_default() -> dict:
@@ -225,10 +222,8 @@ def run_default() -> dict:
     spark = _session(CPUS)
     queries: dict[str, float] = {}
     mon = StealMonitor().start()
-    steal: dict[str, dict] = {}
 
-    ext = run_extraction_bench(spark, SF_DIR, CPUS, mon=mon)
-    steal["kg_extract"] = mon.window_max(*ext["kept_window"])
+    ext = run_extraction_bench(spark, SF_DIR, CPUS, mon)
     queries["kg_extract"] = ext["elapsed_sec"]
 
     # graph stage: linking + CC + nodes/edges over the decoded triples
@@ -236,8 +231,7 @@ def run_default() -> dict:
     from dygiepp_spark.plans.pipeline import build_graph
     from dygiepp_spark.sources.pages import synth_pages
     pages = synth_pages(spark, SF_DIR).repartition(CPUS * 3, "url")
-    triples = extract_triples(pages, from_html=True) \
-        .localCheckpoint(eager=True)
+    triples = extract_triples(pages)[0].localCheckpoint(eager=True)
 
     def graph_stage() -> dict:
         t0 = time.time()
@@ -252,43 +246,12 @@ def run_default() -> dict:
         # partition kg_graph): link = LSH+verify+CC via the eager
         # checkpoint inside build_graph; nodes = canonical text +
         # salted members top-k; edges = gid->entity joins + support agg
-        return {"sec": round(t3 - t0, 3), "window": (t0, t3),
-                "n_nodes": nn, "n_edges": ne,
+        return {"n_nodes": nn, "n_edges": ne,
                 "sub": {"link": sub.get("link_sec", round(t1 - t0, 3)),
                         "nodes": round(t2 - t1, 3),
                         "edges": round(t3 - t2, 3)}}
 
-    g = graph_stage()
-    g_steal = mon.window_max(*g["window"])
-    # steal-aware retry (VERDICT r4 item 5): re-run until the KEPT
-    # window is quiet (st <= ~5%), bounded at 4 attempts — a quiet
-    # slow run is a real number and stands; a contaminated one is the
-    # host's lock-holder-preemption band, not the plan. Prefer a quiet
-    # window over a faster contaminated one. At least one retry always
-    # runs: the stage is the suite's most variable (the host has a
-    # milder degraded mode with st ~0 but ballooned sys CPU that the
-    # st check can't see — measured 45 s vs a 22-28 s standalone
-    # steady state on identical input).
-    attempts = 1
-    while attempts < 4 and (attempts < 2
-                            or (g_steal.get("max_st_pct") or 0) > 5.0):
-        time.sleep(5)  # let the burst pass before resampling
-        g2 = graph_stage()
-        s2 = mon.window_max(*g2["window"])
-        # same keep-rule as the cc loop below: a quiet sample beats a
-        # contaminated one; among equal quietness keep the min — a
-        # quiet-but-degraded slow retry must NOT displace a quiet fast
-        # first run, nor a contaminated-but-fast retry a quiet one
-        quiet2 = (s2.get("max_st_pct") or 0) <= 5.0
-        quiet1 = (g_steal.get("max_st_pct") or 0) <= 5.0
-        if (quiet2 and not quiet1) or (quiet2 == quiet1
-                                       and g2["sec"] < g["sec"]):
-            g, g_steal = g2, s2
-        attempts += 1
-    n_nodes, n_edges = g["n_nodes"], g["n_edges"]
-    queries["kg_graph"] = g["sec"]
-    steal["kg_graph"] = g_steal
-    kg_graph_substages = g["sub"]
+    queries["kg_graph"], g = mon.measure("kg_graph", graph_stage)
 
     # distributed-CC evidence: run star contraction (not the gated
     # driver union-find) on the real mention graph at this sf —
@@ -311,45 +274,23 @@ def run_default() -> dict:
                 .unionByName(mn.select(F.col("gid").alias("src"),
                                        F.col("gid").alias("dst")))
                 .localCheckpoint(eager=True))
-    # cc is 5+ sequential shuffle rounds — the most steal-exposed
-    # stage in the suite; retry until the kept window is QUIET
-    # (st <= ~5%, VERDICT r4 item 5), bounded at 4 attempts. Among
-    # quiet samples keep the min; a quiet sample always beats a
-    # faster contaminated one.
-    cc_dt = None
-    cc_best_stats: dict = {}
-    cc_steal: dict = {}
-    for attempt in range(4):
-        # fresh stats per attempt; keep the snapshot belonging to the
-        # run whose time we report (the two runs can differ in rounds)
-        cc_stats: dict = {}
-        t0 = time.time()
+
+    def cc_solve() -> dict:
+        # fresh stats per run: the kept run's rounds are reported
+        stats: dict = {}
         connected_components(cc_edges, local_solve_max_edges=0,
-                             stats=cc_stats).count()
-        t1 = time.time()
-        s = mon.window_max(t0, t1)
-        quiet = (s.get("max_st_pct") or 0) <= 5.0
-        kept_quiet = (cc_steal.get("max_st_pct") or 0) <= 5.0 \
-            if cc_dt is not None else False
-        if cc_dt is None or (quiet and not kept_quiet) \
-                or (quiet == kept_quiet and t1 - t0 < cc_dt):
-            cc_dt, cc_best_stats, cc_steal = t1 - t0, cc_stats, s
-        if quiet and cc_dt < 15.0:
-            break
-        if not quiet:
-            time.sleep(5)
-    queries["op_cc_distributed"] = round(cc_dt, 3)
-    steal["op_cc_distributed"] = cc_steal
+                             stats=stats).count()
+        return stats
+
+    queries["op_cc_distributed"], cc_stats = mon.measure(
+        "op_cc_distributed", cc_solve)
 
     # label propagation (round 5) on the SAME materialized edge set:
     # 4 synchronous vote rounds — join + map-side-combined count +
     # rank-1 window per round
     from dygiepp_spark.operators.lpa import label_propagation
-    t0 = time.time()
-    label_propagation(cc_edges, iters=4).count()
-    t1 = time.time()
-    queries["op_lpa"] = round(t1 - t0, 3)
-    steal["op_lpa"] = mon.window_max(t0, t1)
+    queries["op_lpa"], _ = mon.measure(
+        "op_lpa", lambda: label_propagation(cc_edges, iters=4).count())
 
     # incremental-merge evidence on the SAME graph: solve a 90% subset
     # outside the timed window, then time cc_incremental absorbing the
@@ -359,12 +300,10 @@ def run_default() -> dict:
     inc_key = F.xxhash64("src", "dst") % 10
     base_assign = connected_components(
         cc_edges.filter(inc_key != 0)).localCheckpoint(eager=True)
-    t0 = time.time()
-    cc_incremental(base_assign, cc_edges.filter(inc_key == 0)).count()
-    t1 = time.time()
-    queries["op_cc_incremental"] = round(t1 - t0, 3)
-    steal["op_cc_incremental"] = mon.window_max(t0, t1)
-    cc_distributed = {k: cc_best_stats.get(k) for k in
+    queries["op_cc_incremental"], _ = mon.measure(
+        "op_cc_incremental", lambda: cc_incremental(
+            base_assign, cc_edges.filter(inc_key == 0)).count())
+    cc_distributed = {k: cc_stats.get(k) for k in
                       ("rounds", "converged", "n_raw_edges", "path")}
     # release localCheckpoint blocks pinned by the graph stage so the
     # remaining operator timings aren't taxed by their memory
@@ -375,40 +314,13 @@ def run_default() -> dict:
         except Exception:
             pass
 
-    def timed(name: str, thunk) -> float:
-        """Best-of-N for slow entries: this box suffers intermittent
-        host-level steal bursts (lock-holder preemption — see
-        BASELINE.md round-3 diagnosis) that inflate a multithreaded
-        stage 10-25x; one retry is not enough when the burst spans
-        both samples. Retry while the best sample still exceeds 5 s,
-        up to 3 total runs, keep the min — and attribute the steal
-        evidence to the KEPT run's window. A contaminated kept window
-        (st > 5%) also triggers a retry even when the sample was
-        fast-looking."""
-        t0 = time.time()
-        thunk()
-        t1 = time.time()
-        dt, win = t1 - t0, (t0, t1)
-        tries = 1
-        while tries < 3 and (
-                dt > 5.0
-                or (mon.window_max(*win).get("max_st_pct") or 0) > 5.0):
-            t0 = time.time()
-            thunk()
-            t1 = time.time()
-            if t1 - t0 < dt:
-                dt, win = t1 - t0, (t0, t1)
-            tries += 1
-        steal[name] = mon.window_max(*win)
-        return round(dt, 3)
-
     qs = E.queries()
     for name in BENCH_QUERIES:
-        queries[name] = timed(
+        queries[name], _ = mon.measure(
             name, lambda name=name: qs[name](spark, SF_DIR).count())
 
     for name, thunk in _op_benches(spark, SF_DIR).items():
-        queries[name] = timed(name, thunk)
+        queries[name], _ = mon.measure(name, thunk)
 
     spark.stop()
     mon.stop()
@@ -418,7 +330,7 @@ def run_default() -> dict:
     # Keep the printed line COMPACT (totals + per-query secs + two
     # steal booleans) and write the full evidence to BENCH_DETAIL.json
     # alongside the repo (VERDICT r4 item 2).
-    stage_st = [v.get("max_st_pct") for v in steal.values()
+    stage_st = [v.get("max_st_pct") for v in mon.kept.values()
                 if v.get("max_st_pct") is not None]
     out = {
         "metric": "kg_pipeline_and_operator_suite_sec",
@@ -429,8 +341,8 @@ def run_default() -> dict:
         "cpus": CPUS,
         "n_docs": ext["n_docs"],
         "n_triples": ext["n_triples"],
-        "n_nodes": n_nodes,
-        "n_edges": n_edges,
+        "n_nodes": g["n_nodes"],
+        "n_edges": g["n_edges"],
         "docs_per_sec": ext["docs_per_sec"],
         "triples_per_sec": ext["triples_per_sec"],
         # quiet-window proof, compact form: steal_quiet certifies
@@ -441,24 +353,11 @@ def run_default() -> dict:
         "steal_quiet": bool(stage_st) and max(stage_st) <= 5.0,
         "steal_max_kept_window_pct": max(stage_st) if stage_st else None,
     }
-    # surface the recorded N->4N evidence (see --scaling and
-    # scripts/scaling_submit.sh) alongside the suite timings
-    for fname, key in (("BENCH_SCALING.json",
-                        "scaling_efficiency_N_to_4N"),
-                       ("BENCH_SUBMIT_SCALING.json",
-                        "spark_submit_scaling_efficiency_N_to_4N")):
-        path = os.path.join(REPO, fname)
-        if os.path.exists(path):
-            try:
-                with open(path) as f:
-                    out[key] = json.load(f)["value"]
-            except Exception:
-                pass
     detail = dict(out)
     detail.update({
-        "kg_graph_substages_sec": kg_graph_substages,
+        "kg_graph_substages_sec": g["sub"],
         "cc_distributed": cc_distributed,
-        "steal_max_by_stage": steal,
+        "steal_max_by_stage": mon.kept,
         "steal_overall": mon.overall_max(),
     })
     try:
@@ -470,49 +369,36 @@ def run_default() -> dict:
 
 
 def run_scaling() -> dict:
-    """Same job, same input bytes, at N and 4N parallelism for two
-    N's. local[2]->local[8] is the clean cluster-size signal on this
-    box; local[8]->local[32] additionally saturates the machine's
-    memory bandwidth / all-core turbo — a pure-multiprocessing control
-    (no Spark; see BASELINE.md) shows the same ceiling, so the 8->32
-    ratio measures the hardware, not the engine."""
+    """Same job, same input bytes, at N and 4N parallelism, with 4N
+    the CPUs this process may run on (local[1] -> local[4] on a
+    4-CPU host): the level pair never oversubscribes the host."""
     replicas = int(os.environ.get("SPARK_GRAFT_SCALING_REPLICAS", "16"))
-    repeats = int(os.environ.get("SPARK_GRAFT_SCALING_REPEATS", "2"))
+    n = len(os.sched_getaffinity(0))
+    lo, hi = max(1, n // 4), n
     mon = StealMonitor().start()
     out = {}
-    for cores in (2, 8, 32):
+    for cores in (lo, hi):
         spark = _session(cores)
-        best = None
-        for _ in range(repeats):
-            res = run_extraction_bench(spark, SF_DIR, cores,
-                                       replicas=replicas, retries=1)
-            if best is None or res["triples_per_sec"] > \
-                    best["triples_per_sec"]:
-                best = res
+        level = f"local[{cores}]"
+        out[level] = run_extraction_bench(spark, SF_DIR, cores, mon,
+                                          replicas=replicas)
         spark.stop()
         # quiet-window proof for the KEPT sample (same hygiene as
         # run_default): steal is one-sided noise, so a kept window
         # with max_st ~0 certifies the level's throughput is genuine
-        best["steal_in_kept_window"] = mon.window_max(
-            *best.pop("kept_window"))
-        out[f"local[{cores}]"] = best
+        out[level]["steal_in_kept_window"] = mon.kept["kg_extract"]
     mon.stop()
-
-    def eff(lo: int, hi: int) -> float:
-        a = out[f"local[{lo}]"]["triples_per_sec"]
-        b = out[f"local[{hi}]"]["triples_per_sec"]
-        return round((b / a) / (hi / lo), 4) if a else 0.0
-
+    a = out[f"local[{lo}]"]["triples_per_sec"]
+    b = out[f"local[{hi}]"]["triples_per_sec"]
     result = {
         "metric": "scaling_efficiency_N_to_4N",
-        "value": eff(2, 8),
+        "value": round((b / a) / (hi / lo), 4) if a else 0.0,
         "unit": "ratio",
         "sf": SF_DIR,
+        "nproc": n,
         "runs": out,
-        "efficiency_local2_to_local8": eff(2, 8),
-        "efficiency_local8_to_local32": eff(8, 32),
-        "throughput_at_N": out["local[2]"]["triples_per_sec"],
-        "throughput_at_4N": out["local[8]"]["triples_per_sec"],
+        "throughput_at_N": a,
+        "throughput_at_4N": b,
         "steal_checked": True,
         "steal_overall": mon.overall_max(),
     }

@@ -557,7 +557,8 @@ def loss_document(url: str, text: str, gold: dict, w: dict) -> dict:
     Gold items outside the model's hypothesis space (span wider than
     the enumeration limit, pair outside the pruned beam) are
     unreachable exactly as in the reference's pruned training and are
-    dropped. Candidate sets: NER = every enumerated span; relations =
+    dropped. A label outside the task's vocabulary raises ValueError
+    naming the task and label. Candidate sets: NER = every enumerated span; relations =
     ordered same-sentence beam pairs; triggers = every token;
     args = GOLD trigger tokens x same-sentence beam spans (teacher
     forcing). Per task returns (n candidates, summed NLL); coref's
@@ -577,11 +578,16 @@ def loss_document(url: str, text: str, gold: dict, w: dict) -> dict:
     h, starts, ends, sids, g, m_scores, p_idx = _forward(
         tokens, sent_lens, w)
 
-    def _lab_idx(labels: list[str]) -> dict[str, int]:
-        return {lab: i for i, lab in enumerate(labels)}
+    def _lab_idx(task: str, labels: list[str], lab: str) -> int:
+        # an out-of-vocabulary gold label must not silently train the
+        # null class
+        if lab not in labels:
+            raise ValueError(f"loss_document: {task} gold label {lab!r} "
+                             f"is not in {labels}")
+        return labels.index(lab)
 
     # NER: every enumerated span scored, gold label or null
-    ner_gold = {(int(s), int(e)): _lab_idx(C.NER_LABELS).get(lab, 0)
+    ner_gold = {(int(s), int(e)): _lab_idx("ner", C.NER_LABELS, lab)
                 for s, e, lab in gold.get("ner", [])}
     span_gold = np.zeros(len(starts), dtype=np.int64)
     for i in range(len(starts)):
@@ -599,7 +605,7 @@ def loss_document(url: str, text: str, gold: dict, w: dict) -> dict:
 
     # relations: same sentence-group blocking as decode M7
     rel_gold = {(int(a), int(b), int(c), int(d)):
-                _lab_idx(C.REL_LABELS).get(lab, 0)
+                _lab_idx("relation", C.REL_LABELS, lab)
                 for a, b, c, d, lab in gold.get("relations", [])}
     groups = _sentence_groups(sids[p_idx])
     r_n, r_nll = 0, 0.0
@@ -621,7 +627,7 @@ def loss_document(url: str, text: str, gold: dict, w: dict) -> dict:
     out["relation"] = {"n": r_n, "nll": r_nll}
 
     # triggers: every token
-    trig_gold = {int(p): _lab_idx(C.TRIGGER_LABELS).get(lab, 0)
+    trig_gold = {int(p): _lab_idx("trigger", C.TRIGGER_LABELS, lab)
                  for p, lab in gold.get("triggers", [])}
     t_logits = nn.ffn(h, w["t_w1"], w["t_b1"], w["t_w2"], w["t_b2"])
     t_lp = _log_softmax(t_logits)
@@ -634,7 +640,7 @@ def loss_document(url: str, text: str, gold: dict, w: dict) -> dict:
 
     # arguments: gold trigger tokens x same-sentence beam spans
     arg_gold = {(int(t), int(s), int(e)):
-                _lab_idx(C.ARG_LABELS).get(lab, 0)
+                _lab_idx("arg", C.ARG_LABELS, lab)
                 for t, s, e, lab in gold.get("args", [])}
     tok_sid = np.repeat(np.arange(len(sent_lens)), sent_lens)
     gold_trigs = np.array(sorted(p for p in trig_gold if 0 <= p < n),

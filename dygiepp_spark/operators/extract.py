@@ -51,10 +51,7 @@ class _PartitionTimingParam:
         return a
 
 
-def _decode_batches(batches: Iterator[pd.DataFrame],
-                    from_html: bool,
-                    with_partition: bool,
-                    timing_acc=None,
+def _decode_batches(batches: Iterator[pd.DataFrame], timing_acc,
                     weights_bc=None) -> Iterator[pd.DataFrame]:
     # imports inside the UDF: executed on the executor python worker
     import time as _time
@@ -66,89 +63,58 @@ def _decode_batches(batches: Iterator[pd.DataFrame],
     # trained model.tar.gz path, one deserialize per executor), else
     # the seed-derived fixture built once per worker process
     w = weights_bc.value if weights_bc is not None else get_weights()
-    cols = _COLS + (["partition_id"] if with_partition else [])
     for pdf in batches:
+        with_pid = "partition_id" in pdf.columns
+        pids = pdf["partition_id"] if with_pid else [None] * len(pdf)
         rows: list[tuple] = []
         timing: dict[int, tuple[int, float, int]] = {}
-        if from_html:
-            texts = [extract_text(h) for h in pdf["html"]]
-        else:
-            texts = [t if t is not None else "" for t in pdf["text"]]
-        pids = pdf["partition_id"] if with_partition else None
         meta: dict = {}
-        for i, (url, text) in enumerate(zip(pdf["url"], texts)):
+        for url, html, pid in zip(pdf["url"], pdf["html"], pids):
+            text = extract_text(html)
             t0 = _time.perf_counter()
             doc_rows = triples_rows(url, text, w, meta=meta)
             dt = _time.perf_counter() - t0
-            if with_partition:
-                pid = int(pids.iloc[i])
-                rows.extend(r + (pid,) for r in doc_rows)
-                n0, s0, tr0 = timing.get(pid, (0, 0.0, 0))
-                timing[pid] = (n0 + 1, s0 + dt,
-                               tr0 + int(meta.get("truncated", False)))
-            else:
+            if pid is None:
                 rows.extend(doc_rows)
-        if timing_acc is not None and timing:
+                continue
+            pid = int(pid)
+            rows.extend(r + (pid,) for r in doc_rows)
+            n0, s0, tr0 = timing.get(pid, (0, 0.0, 0))
+            timing[pid] = (n0 + 1, s0 + dt, tr0 + int(meta["truncated"]))
+        if timing:
             timing_acc.add(timing)
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame(
+            rows, columns=_COLS + (["partition_id"] if with_pid else []))
 
 
-def extract_triples(pages: DataFrame, from_html: bool = True,
-                    with_partition: bool = False,
-                    length_bucketed: bool = False,
-                    weights_bc=None) -> DataFrame:
-    """pages -> triples. `from_html=True` runs the full X1 path
-    (html -> byte-identical text -> decode); `False` short-circuits to
-    the `text` column (identical output by the [BASELINE] invariant,
-    golden-tested).
+def extract_triples(pages: DataFrame, weights_bc=None):
+    """pages(url, html[, partition_id]) -> (triples, accumulator).
 
-    `length_bucketed` applies the W4 physical optimization (SURVEY.md
-    §2.5): sortWithinPartitions by document length before the UDF, so
-    Arrow batches hold similarly-sized documents (evens out per-batch
-    decode time; the reference's bucket-sampler analog). Semantics-free
-    — decode output is per-document and tested invariant.
+    Runs the full X1 path (html -> byte-identical text -> decode).
+    When `pages` has a `partition_id` column, the triples carry it and,
+    after an action on them, `acc.value` is {partition_id: (n_docs,
+    decode_secs, n_truncated)} — measured inside the UDF, the honest
+    A5 docs/sec per WARC partition, plus the count of documents cut at
+    MAX_DOC_TOKENS (a silent cut would be undebuggable at crawl
+    scale). Without that column `acc.value` stays empty. Accumulator
+    updates made inside a transformation are re-applied when a stage
+    retries, so read exact counts from the data, not from `acc`.
 
     `weights_bc` is an optional broadcast weight dict (from
     kernel.weights.broadcast_archive — the literal model.tar.gz S2
     path): pass it to run the distributed decode with trained weights
     instead of the seed-derived fixture."""
-    from pyspark.sql import functions as F
-    in_cols = ["url", "html" if from_html else "text"]
-    if with_partition:
-        in_cols.append("partition_id")
-    schema = TRIPLE_SCHEMA_PART if with_partition else TRIPLE_SCHEMA
+    acc = pages.sparkSession.sparkContext.accumulator(
+        {}, _PartitionTimingParam())
+    with_pid = "partition_id" in pages.columns
+    in_cols = ["url", "html"] + (["partition_id"] if with_pid else [])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_batches(batches, from_html, with_partition,
-                               weights_bc=weights_bc)
-
-    selected = pages.select(*in_cols)
-    if length_bucketed:
-        selected = selected.sortWithinPartitions(
-            F.length(in_cols[1]).asc())
-    return selected.mapInPandas(fn, schema)
-
-
-def extract_triples_with_metrics(pages: DataFrame,
-                                 from_html: bool = True,
-                                 weights_bc=None):
-    """Like extract_triples(with_partition=True) but also returns a
-    per-partition timing accumulator: after an action on the returned
-    DataFrame, `acc.value` is {partition_id: (n_docs, decode_secs,
-    n_truncated)} — measured inside the UDF, the honest A5 docs/sec
-    per WARC partition, plus the count of documents cut at
-    MAX_DOC_TOKENS (a silent cut would be undebuggable at crawl
-    scale). Returns (triples_df, accumulator)."""
-    spark = pages.sparkSession
-    acc = spark.sparkContext.accumulator({}, _PartitionTimingParam())
-    in_cols = ["url", "html" if from_html else "text", "partition_id"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_batches(batches, from_html, True, timing_acc=acc,
-                               weights_bc=weights_bc)
+        return _decode_batches(batches, acc, weights_bc)
 
     return (pages.select(*in_cols)
-            .mapInPandas(fn, TRIPLE_SCHEMA_PART), acc)
+            .mapInPandas(fn, TRIPLE_SCHEMA_PART if with_pid
+                         else TRIPLE_SCHEMA), acc)
 
 
 def mentions_from_triples(triples: DataFrame) -> DataFrame:

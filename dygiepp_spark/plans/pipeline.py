@@ -65,69 +65,56 @@ def run_extraction(spark: SparkSession, sf_dir: str, out_dir: str,
     if resume:
         done = completed_partitions(spark, out_dir)
         pages = pages.join(done, "partition_id", "left_anti")
+    # per-partition page counts, taken once and before the sandbox
+    # repartition (no html shuffle): they drive the early exit, n_docs
+    # and the lineage rows
+    docs_per_part = {r.partition_id: r["count"] for r in
+                     pages.groupBy("partition_id").count().collect()}
+    if not docs_per_part:
+        return {"run_id": run_id, "n_docs": 0, "n_triples": 0,
+                "elapsed_sec": 0.0, "partitions": []}
     if parallelism:
         # sandbox-only: the sf parquet is a single split; real WARC
         # inputs arrive in thousands of splits and skip this shuffle.
         pages = pages.repartition(parallelism, "url")
 
-    n_docs = pages.count()
-    if n_docs == 0:
-        return {"run_id": run_id, "n_docs": 0, "n_triples": 0,
-                "elapsed_sec": 0.0, "partitions": []}
-
     t0 = time.time()
-    from dygiepp_spark.operators.extract import extract_triples_with_metrics
-    triples, timing_acc = extract_triples_with_metrics(
-        pages, from_html=True, weights_bc=weights_bc)
-    # A5: observe() rides the write action — global metrics with no
-    # second pass over the data (SURVEY.md §2.4 A5).
-    from pyspark.sql import Observation
-    obs = Observation("kg_extraction")
-    triples = triples.observe(
-        obs, F.count(F.lit(1)).alias("n_triples"),
-        F.approx_count_distinct("url").alias("n_docs_approx"))
+    from dygiepp_spark.operators.extract import extract_triples
+    triples, timing_acc = extract_triples(pages, weights_bc=weights_bc)
     from dygiepp_spark.sources.catalog import write_table
     write_table(triples, os.path.join(out_dir, "triples"),
                 partition_by=["partition_id"],
                 mode="overwrite_partitions")
     elapsed = time.time() - t0
-    observed = obs.get
 
-    written = spark.read.parquet(os.path.join(out_dir, "triples"))
-    pages_per_part = (pages.groupBy("partition_id")
-                      .agg(F.count(F.lit(1)).alias("n_docs")))
-    stats = (written.groupBy("partition_id")
-             .agg(F.count(F.lit(1)).alias("n_triples"))
-             .join(pages_per_part, "partition_id", "right")
-             .select("partition_id",
-                     F.col("n_docs").cast("bigint"),
-                     F.coalesce("n_triples", F.lit(0)).cast("bigint")
-                     .alias("n_triples"))
-             .collect())
+    # exact triple counts come from the written data: accumulator
+    # updates inside a transformation repeat when a stage retries, so
+    # the accumulator supplies only per-partition seconds/truncations
+    parts = sorted(docs_per_part)
+    triples_per_part = {
+        r.partition_id: r["count"] for r in
+        spark.read.parquet(os.path.join(out_dir, "triples"))
+        .filter(F.col("partition_id").isin(parts))
+        .groupBy("partition_id").count().collect()}
+    n_docs = sum(docs_per_part.values())
     docs_per_sec = n_docs / elapsed if elapsed > 0 else 0.0
     # per-partition decode rate measured INSIDE the UDF (accumulator);
     # falls back to the run-level rate for partitions with no sample
-    per_part = timing_acc.value or {}
-    def _rate(pid: int) -> float:
-        n, s, _t = per_part.get(pid, (0, 0.0, 0))
-        return (n / s) if s > 0 else docs_per_sec
-    def _trunc(pid: int) -> int:
-        return per_part.get(pid, (0, 0.0, 0))[2]
-    lineage_rows = [
-        (int(r.partition_id), int(r.n_docs), int(r.n_triples),
-         float(_rate(int(r.partition_id))),
-         int(_trunc(int(r.partition_id))), "done", run_id)
-        for r in stats
-    ]
-    from dygiepp_spark.sources.catalog import write_table as _wt
-    _wt(spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1),
+    per_part = timing_acc.value
+    lineage_rows = []
+    for pid in parts:
+        n, s, trunc = per_part.get(pid, (0, 0.0, 0))
+        lineage_rows.append(
+            (pid, docs_per_part[pid], triples_per_part.get(pid, 0),
+             n / s if s > 0 else docs_per_sec, trunc, "done", run_id))
+    write_table(
+        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1),
         _lineage_path(out_dir), mode="append")
 
-    n_triples = sum(r.n_triples for r in stats)
-    return {"run_id": run_id, "n_docs": n_docs, "n_triples": n_triples,
-            "observed_n_triples": int(observed["n_triples"]),
+    return {"run_id": run_id, "n_docs": n_docs,
+            "n_triples": sum(triples_per_part.values()),
             "elapsed_sec": elapsed, "docs_per_sec": docs_per_sec,
-            "partitions": [r.partition_id for r in stats]}
+            "partitions": parts}
 
 
 def build_graph(spark: SparkSession, triples: DataFrame,

@@ -16,7 +16,8 @@ def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dygiepp_spark.sources.pages import synth_pages
     tune_session(spark)
     ensure_pyfiles(spark)
-    return extract_triples(synth_pages(spark, sf_dir), from_html=True)
+    return extract_triples(
+        synth_pages(spark, sf_dir).drop("partition_id"))[0]
 
 
 @register("kg_triples")

@@ -10,6 +10,7 @@ instead of the 200 default.
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
 import shutil
@@ -21,23 +22,28 @@ from dygiepp_spark import config as C
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
+_PYFILES_ZIP: str | None = None  # this process's package zip
 
 
 def ensure_pyfiles(spark: SparkSession) -> None:
     """Ship the package to executor python workers — the sandbox
     equivalent of `spark-submit --py-files dygiepp_spark.zip`
-    (north_star submission form). Idempotent per session."""
+    (north_star submission form). Idempotent per session.
+
+    The zip is built once per process in a fresh private temp dir, so
+    no file left by an earlier process (one with the same pid, say)
+    is ever shipped, and removed at interpreter exit: executors fetch
+    it lazily, so it must outlive every session of the process."""
+    global _PYFILES_ZIP
     if getattr(spark, "_dygiepp_pyfiles_added", False):
         return
-    pkg_dir = os.path.join(_REPO_ROOT, "dygiepp_spark")
-    zip_base = os.path.join(tempfile.gettempdir(),
-                            f"dygiepp_spark_pyfiles_{os.getpid()}")
-    zip_path = zip_base + ".zip"
-    if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip",
-                            root_dir=os.path.dirname(pkg_dir),
-                            base_dir="dygiepp_spark")
-    spark.sparkContext.addPyFile(zip_path)
+    if _PYFILES_ZIP is None:
+        zip_dir = tempfile.mkdtemp(prefix="dygiepp_spark_pyfiles_")
+        atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+        _PYFILES_ZIP = shutil.make_archive(
+            os.path.join(zip_dir, "dygiepp_spark"), "zip",
+            root_dir=_REPO_ROOT, base_dir="dygiepp_spark")
+    spark.sparkContext.addPyFile(_PYFILES_ZIP)
     spark._dygiepp_pyfiles_added = True  # type: ignore[attr-defined]
 
 

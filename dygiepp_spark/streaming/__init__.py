@@ -36,7 +36,7 @@ def stream_pages_to_triples(spark: SparkSession, pages_dir: str,
               .parquet(pages_dir))
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        (extract_triples(batch_df, from_html=True)
+        (extract_triples(batch_df)[0]
          .write.mode("append").parquet(out_dir))
 
     return (stream.writeStream

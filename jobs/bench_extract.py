@@ -45,10 +45,10 @@ def main() -> None:
     pages = pages.repartition(cores * 3, "url")
     n_docs = pages.count()
     # warm python workers outside the timed window
-    extract_triples(synth_pages(spark, args.sf_dir).repartition(cores),
-                    from_html=True).count()
+    extract_triples(synth_pages(spark, args.sf_dir)
+                    .repartition(cores))[0].count()
     t0 = time.time()
-    n_triples = extract_triples(pages, from_html=True).count()
+    n_triples = extract_triples(pages)[0].count()
     dt = time.time() - t0
     print(json.dumps({
         "cores": cores, "n_docs": n_docs, "n_triples": n_triples,

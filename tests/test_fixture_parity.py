@@ -61,7 +61,7 @@ def test_spark_matches_oracle_on_fixture(spark):
     from dygiepp_spark.sources.jsonl import (docs_to_pages,
                                              read_document_jsonl)
     df = read_document_jsonl(spark, FIXTURE)
-    pred = extract_triples(docs_to_pages(df), from_html=True).toPandas()
+    pred = extract_triples(docs_to_pages(df))[0].toPandas()
     pairs = [(d["doc_key"],
               " ".join(t for s in d["sentences"] for t in s))
              for d in _docs()]

@@ -231,6 +231,27 @@ def test_lineage_per_partition_rates(spark, out_dir):
     assert len({round(v, 6) for v in rates.values()}) > 1
 
 
+def test_lineage_counts_equal_direct_counts(spark, out_dir):
+    """Each lineage row's n_docs/n_triples equals a direct count of
+    that partition's input pages and written triples; the returned
+    totals are their sums."""
+    from dygiepp_spark.plans.pipeline import run_extraction
+    from dygiepp_spark.sources.pages import synth_pages
+    sf = "/root/testdata/sf0.001"
+    m = run_extraction(spark, sf, out_dir, resume=False, parallelism=3)
+    lin = spark.read.parquet(f"{out_dir}/lineage").toPandas()
+    pages = synth_pages(spark, sf).select("partition_id").toPandas()
+    written = (spark.read.parquet(f"{out_dir}/triples")
+               .select("partition_id").toPandas())
+    docs = pages["partition_id"].value_counts().to_dict()
+    trip = written["partition_id"].value_counts().to_dict()
+    assert dict(zip(lin["partition_id"], lin["n_docs"])) == docs
+    assert dict(zip(lin["partition_id"], lin["n_triples"])) == trip
+    assert m["n_docs"] == sum(docs.values()) == 500
+    assert m["n_triples"] == sum(trip.values())
+    assert sorted(m["partitions"]) == sorted(docs)
+
+
 def test_pagerank_matches_dense_power_iteration(spark):
     """Distributed PageRank == numpy dense power iteration with the
     same damping/dangling conventions, to 1e-9, on a hand-built graph

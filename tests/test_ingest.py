@@ -45,7 +45,7 @@ def test_ace_corpus_reader_roundtrips_through_extraction(spark):
     assert len(rows) == 1
     assert rows[0].text == ("John Smith visited Acme Corp in Paris. "
                             "The company hired him last year.")
-    pred = extract_triples(docs_to_pages(df), from_html=True).toPandas()
+    pred = extract_triples(docs_to_pages(df))[0].toPandas()
     gold = decode_corpus([(r.doc_key, r.text) for r in rows])
     m = triple_prf(pred, gold)
     assert m["precision"] == 1.0 and m["recall"] == 1.0
@@ -136,7 +136,7 @@ def test_evaluate_gold_against_itself_is_perfect(spark):
     # and the composed entry point runs end-to-end on real decode
     from dygiepp_spark.operators.extract import extract_triples
     from dygiepp_spark.sources.jsonl import docs_to_pages
-    triples = extract_triples(docs_to_pages(docs), from_html=True)
+    triples = extract_triples(docs_to_pages(docs))[0]
     tables = evaluate_against_gold(triples, docs)
     assert {r.label for r in tables["ner"].collect()} >= {"__ALL__"}
 
@@ -318,7 +318,7 @@ def test_evaluate_against_gold_gates_tables_on_gold_content(spark):
     from dygiepp_spark.sources.ingest import read_ace_corpus
     from dygiepp_spark.sources.jsonl import docs_to_pages
     docs = read_ace_corpus(spark, FIX)
-    triples = extract_triples(docs_to_pages(docs), from_html=True)
+    triples = extract_triples(docs_to_pages(docs))[0]
     tables = evaluate_against_gold(triples, docs)
     # ACE fixture: events present, clusters absent -> no zero-gold
     # coref tables fabricated

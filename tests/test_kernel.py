@@ -187,3 +187,19 @@ def test_golden_decode_hash(sf_docs):
         f"kernel decode drifted: {digest} (update the pin only for a "
         f"deliberate semantics change)")
     assert len(df) == 1174
+
+
+@pytest.mark.parametrize("task,gold", [
+    ("ner", {"ner": [(0, 1, "Person")]}),
+    ("relation", {"relations": [(0, 0, 2, 2, "BORN-IN")]}),
+    ("trigger", {"triggers": [(1, "Attack")]}),
+    ("arg", {"args": [(1, 0, 0, "Victim")]}),
+])
+def test_loss_rejects_out_of_vocab_gold_label(task, gold):
+    """An unknown gold label fails loudly instead of training the null
+    class; the message names the task and the label."""
+    from dygiepp_spark.kernel.model import loss_document
+    label = next(iter(gold.values()))[0][-1]
+    with pytest.raises(ValueError, match=f"{task} gold label '{label}'"):
+        loss_document("u", "the fast parser uses spark", gold,
+                      get_weights())

@@ -340,7 +340,7 @@ def test_document_jsonl_roundtrip(spark, tmp_path):
     row = {r.doc_key: r.text for r in df.collect()}
     assert row["d1"] == "the fast parser uses spark it scales"
 
-    triples = extract_triples(docs_to_pages(df), from_html=True)
+    triples = extract_triples(docs_to_pages(df))[0]
     preds = triples_to_predictions(triples)
     assert preds.count() <= 2
     assert "predicted_ner" in preds.columns
@@ -380,8 +380,7 @@ def test_streaming_wrapper_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.read.parquet(out_dir)
     from dygiepp_spark.operators.extract import extract_triples
-    batch = extract_triples(
-        spark.read.parquet(pages_dir), from_html=True)
+    batch = extract_triples(spark.read.parquet(pages_dir))[0]
     assert got.count() == batch.count()
 
 
@@ -408,8 +407,7 @@ def test_coref_clusters_consistent_with_links(spark):
     from dygiepp_spark.operators.linking import coref_clusters
     from dygiepp_spark.sources.pages import synth_pages
     triples = extract_triples(
-        synth_pages(spark, "/root/testdata/sf0.001").limit(40),
-        from_html=True)
+        synth_pages(spark, "/root/testdata/sf0.001").limit(40))[0]
     links = triples.filter(F.col("kind") == "coref").collect()
     clusters = coref_clusters(triples).collect()
     cl = {}
@@ -552,9 +550,8 @@ def test_extract_with_broadcast_archive(spark, tmp_path):
     arc = str(tmp_path / "model.tar.gz")
     save_archive(build_weights(), arc)
     bc = broadcast_archive(spark, arc)
-    base = extract_triples(pages, from_html=True).toPandas()
-    via_arc = extract_triples(pages, from_html=True,
-                              weights_bc=bc).toPandas()
+    base = extract_triples(pages)[0].toPandas()
+    via_arc = extract_triples(pages, weights_bc=bc)[0].toPandas()
     key = ["url", "kind", "subj", "pred", "obj", "subj_start",
            "subj_end", "obj_start", "obj_end", "sent_id"]
     a = base[key].sort_values(key).reset_index(drop=True)
@@ -569,8 +566,7 @@ def test_extract_with_broadcast_archive(spark, tmp_path):
     arc2 = str(tmp_path / "model2.tar.gz")
     save_archive(w2, arc2)
     bc2 = broadcast_archive(spark, arc2)
-    via_arc2 = extract_triples(pages, from_html=True,
-                               weights_bc=bc2).toPandas()
+    via_arc2 = extract_triples(pages, weights_bc=bc2)[0].toPandas()
     assert (via_arc2["kind"] == "event").sum() == 0
     assert (base["kind"] == "event").sum() > 0
 

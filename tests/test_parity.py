@@ -18,17 +18,20 @@ def gold(sf_docs):
     return decode_corpus(sf_docs[:N_DOCS])
 
 
-def _spark_triples(spark, n_partitions: int) -> pd.DataFrame:
+def _pages(spark, n_partitions: int):
     from pyspark.sql import functions as F
-    from dygiepp_spark.operators.extract import extract_triples
     from dygiepp_spark.sources.pages import synth_pages
-    pages = (synth_pages(spark, "/root/testdata/sf0.001")
-             .withColumn("doc_id",
-                         F.split(F.col("url"), "/").getItem(4).cast("long"))
-             .filter(F.col("doc_id") < N_DOCS)
-             .drop("doc_id")
-             .repartition(n_partitions))
-    return extract_triples(pages, from_html=True).toPandas()
+    return (synth_pages(spark, "/root/testdata/sf0.001")
+            .withColumn("doc_id",
+                        F.split(F.col("url"), "/").getItem(4).cast("long"))
+            .filter(F.col("doc_id") < N_DOCS)
+            .drop("doc_id")
+            .repartition(n_partitions))
+
+
+def _spark_triples(spark, n_partitions: int) -> pd.DataFrame:
+    from dygiepp_spark.operators.extract import extract_triples
+    return extract_triples(_pages(spark, n_partitions))[0].toPandas()
 
 
 def test_spark_matches_oracle(spark, gold):
@@ -52,32 +55,24 @@ def test_partitioning_invariance(spark, gold):
     pd.testing.assert_frame_equal(sa, sb)
 
 
-def test_html_path_equals_text_path(spark):
-    """X1 invariant end-to-end: decoding from html == decoding from the
-    text column (byte-identical extraction)."""
+def test_extract_triples_partition_contract(spark):
+    """`partition_id` rides through extraction and keys the timing
+    accumulator exactly when the input pages carry it."""
     from dygiepp_spark.operators.extract import extract_triples
-    from dygiepp_spark.sources.pages import synth_pages
-    pages = synth_pages(spark, "/root/testdata/sf0.001").limit(60)
-    via_html = extract_triples(pages, from_html=True).toPandas()
-    via_text = extract_triples(pages, from_html=False).toPandas()
-    key = ["url", "kind", "subj", "pred", "obj", "subj_start",
-           "subj_end", "obj_start", "obj_end", "sent_id"]
-    pd.testing.assert_frame_equal(
-        via_html.sort_values(key).reset_index(drop=True),
-        via_text.sort_values(key).reset_index(drop=True))
+    from dygiepp_spark.sources.jsonl import docs_to_pages
+    pages = _pages(spark, 3)
+    page_part = dict(pages.select("url", "partition_id").collect())
+    triples, acc = extract_triples(pages)
+    got = triples.toPandas()
+    assert len(got) > 0
+    assert (got["url"].map(page_part) == got["partition_id"]).all()
+    assert set(acc.value) == set(page_part.values())
+    assert sum(n for n, _secs, _trunc in acc.value.values()) == N_DOCS
 
-
-def test_length_bucketed_batching_invariant(spark):
-    """W4 (SURVEY §2.5): length-bucketed batching is a physical
-    optimization only — decode output identical."""
-    from dygiepp_spark.operators.extract import extract_triples
-    from dygiepp_spark.sources.pages import synth_pages
-    pages = synth_pages(spark, "/root/testdata/sf0.001").limit(80)
-    a = extract_triples(pages, from_html=True).toPandas()
-    b = extract_triples(pages, from_html=True,
-                        length_bucketed=True).toPandas()
-    key = ["url", "kind", "subj", "pred", "obj", "subj_start",
-           "subj_end", "obj_start", "obj_end", "sent_id"]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True),
-        b.sort_values(key).reset_index(drop=True))
+    docs = spark.createDataFrame(
+        [("d1", "the fast parser uses spark"), ("d2", "it scales")],
+        "doc_key string, text string")
+    triples, acc = extract_triples(docs_to_pages(docs))
+    assert "partition_id" not in triples.columns
+    triples.collect()
+    assert acc.value == {}

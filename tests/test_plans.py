@@ -13,8 +13,7 @@ def _plan(df) -> str:
 def test_extraction_is_zero_shuffle_and_pruned(spark):
     from dygiepp_spark.operators.extract import extract_triples
     from dygiepp_spark.sources.pages import synth_pages
-    df = extract_triples(synth_pages(spark, "/root/testdata/sf0.001"),
-                         from_html=True)
+    df = extract_triples(synth_pages(spark, "/root/testdata/sf0.001"))[0]
     plan = _plan(df)
     assert "Exchange" not in plan, "extraction must stay narrow"
     assert "MapInPandas" in plan
@@ -257,3 +256,39 @@ def test_decontaminate_flags_every_bench_source(spark):
            QUERIES["q_decontaminate"](spark, SF_SMOKE).collect()}
     for d in expected:
         assert d in got and got[d] >= 1, d
+
+
+def test_ensure_pyfiles_never_ships_a_stale_zip():
+    """A zip left at the per-pid path by an earlier process is never
+    shipped: the zip handed to addPyFile holds the current package."""
+    import os
+    import tempfile
+    import zipfile
+
+    from dygiepp_spark.plans import session
+    stale = os.path.join(tempfile.gettempdir(),
+                         f"dygiepp_spark_pyfiles_{os.getpid()}.zip")
+    with zipfile.ZipFile(stale, "w") as z:
+        z.writestr("dygiepp_spark/__init__.py", "STALE = True\n")
+
+    class _Context:
+        shipped: list[str] = []
+
+        def addPyFile(self, path):
+            self.shipped.append(path)
+
+    class _Session:
+        sparkContext = _Context()
+
+    try:
+        session.ensure_pyfiles(_Session())
+    finally:
+        os.remove(stale)
+    [zip_path] = _Context.shipped
+    assert zip_path != stale
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    with zipfile.ZipFile(zip_path) as z:
+        for rel in ("__init__.py", "operators/extract.py",
+                    "plans/session.py"):
+            with open(os.path.join(pkg, rel)) as f:
+                assert z.read(f"dygiepp_spark/{rel}").decode() == f.read()
